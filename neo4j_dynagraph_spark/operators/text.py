@@ -8,8 +8,10 @@ token pipelines at 100 TB live or die on staying inside codegen).
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from neo4j_dynagraph_spark import functions as dfn
 from neo4j_dynagraph_spark.operators.dedup import shingles_df, tokens_df
@@ -25,12 +27,21 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 STOPWORDS_EN = ("the", "a")
 
 
-def _sql_str(s: str) -> str:
+def _sql_str(spark: SparkSession, s: str) -> str:
     """``s`` as a Spark SQL string literal. The parser's default
     escaping is backslash-style (verified: ``'it\\'s'`` / ``'a\\\\b'``
     round-trip), so escaping the backslash itself and the quote makes
     ANY caller-supplied term safe to embed — the injection concern
-    that previously forced the Column API onto the BM25 hot path."""
+    that previously forced the Column API onto the BM25 hot path.
+    A session with the legacy ``spark.sql.parser.escapedStringLiterals``
+    parses literals verbatim, where this escaping breaks quotes and
+    changes backslashes, so such a session is rejected."""
+    legacy = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+    if legacy.lower() != "false":
+        raise ValueError(
+            "spark.sql.parser.escapedStringLiterals must be false to embed "
+            f"escaped SQL string literals (got {legacy!r})"
+        )
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
@@ -1308,8 +1319,18 @@ def bm25_scores(
 
     idf uses the BM25+ always-positive form ln(1 + (N-df+.5)/(df+.5)).
     Columns: doc_id, n_hit (query terms present), bm25 (round 6).
+    No terms give an empty result with those columns; ``k1`` and ``b``
+    must be finite.
     """
+    if not (math.isfinite(k1) and math.isfinite(b)):
+        raise ValueError(
+            f"bm25_scores: k1 and b must be finite, got k1={k1!r}, b={b!r}"
+        )
     toked = tokens_df(docs, text_col)
+    if not terms:
+        return toked.select(
+            "doc_id", F.lit(0).alias("n_hit"), F.lit(0.0).alias("bm25")
+        ).where(F.lit(False))
     # r14 (r13 "not yet optimized" #6): expressions are built as
     # batched SQL strings — ONE Py4J parse call per select instead of
     # hundreds of Column-API JVM round-trips. The local bench floor IS
@@ -1323,9 +1344,8 @@ def bm25_scores(
         "doc_id",
         "CAST(size(t) AS DOUBLE) AS dl",
         *[
-            f"CAST(size(filter(t, x -> x = {_sql_str(t)})) AS DOUBLE)"
-            f" AS tf{i}"
-            for i, t in enumerate(terms)
+            f"CAST(size(filter(t, x -> x = {lit})) AS DOUBLE) AS tf{i}"
+            for i, lit in enumerate(_sql_str(docs.sparkSession, t) for t in terms)
         ],
     )
     stats = per_doc.agg(

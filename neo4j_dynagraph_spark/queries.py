@@ -1622,7 +1622,7 @@ g AS (SELECT actor1, actor2,
                                             ORDER BY frame_id) AS gap
       FROM e)
 SELECT actor1, actor2, count(*) AS n_gaps, min(gap) AS min_gap,
-       max(gap) AS max_gap, sum(gap) AS sum_gap,
+       max(gap) AS max_gap, CAST(sum(gap) AS BIGINT) AS sum_gap,
        round(avg(gap), 6) AS avg_gap
 FROM g WHERE gap IS NOT NULL
 GROUP BY 1, 2 ORDER BY 1, 2

@@ -29,6 +29,8 @@ projected expression and does not block pushdown on any other column.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
@@ -121,8 +123,18 @@ def normalize_stream_ts(
 # reuse as Spark's own file-listing cache
 # (spark.sql.hive.filesourcePartitionFileCacheSize) — never rows,
 # results, or intermediates; every query still computes from the
-# parquet inputs on every invocation.
-_SCHEMA_CACHE: dict[str, "object"] = {}
+# parquet inputs on every invocation. Keyed on (path, mtime): a file
+# rewritten at the same path (regenerated testdata inside one process)
+# gets a new mtime and is re-inferred instead of read with a stale
+# schema. A path os.stat cannot see (remote store) keys on mtime None.
+_SCHEMA_CACHE: dict[tuple[str, int | None], "object"] = {}
+
+
+def _mtime_ns(path: str) -> int | None:
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -132,10 +144,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # without our session factory) read legacy TIMESTAMP(NANOS) parquet
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    sch = _SCHEMA_CACHE.get(path)
+    key = (path, _mtime_ns(path))
+    sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(sch).parquet(path)
     for col in _EVENT_TS_COLUMNS.get(name, []):

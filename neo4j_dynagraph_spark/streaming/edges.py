@@ -23,10 +23,11 @@ incremental forms live here:
   (O(1) from that point) and emits nothing — identical drop semantics
   to batch, so stream == batch holds guard-for-guard.
 
-Drained with Trigger.AvailableNow, both must equal the batch
-``presence_to_frame_interactions`` edge set — q_stream_edges checks the
-join form against the batch SQL oracle; the stateful form is
-differentially tested with a synthetic hot frame.
+Drained with Trigger.AvailableNow through a parquet sink (pairs grow
+quadratically with frame occupancy, so never through the driver), both
+must equal the batch ``presence_to_frame_interactions`` edge set —
+q_stream_edges checks the join form against the batch SQL oracle; the
+stateful form is differentially tested with a synthetic hot frame.
 """
 
 from __future__ import annotations
@@ -34,6 +35,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, BooleanType, LongType, StructField, StructType
+
+from neo4j_dynagraph_spark.streaming.drain import (
+    drain_stream_to_parquet,
+    start_bounded_drain,
+)
 
 
 def stream_frame_edges(
@@ -141,6 +147,10 @@ def stateful_frame_edges(
     ingest.presence_to_frame_interactions(max_actors_per_frame=...),
     so one near-clique frame (stadium, bot storm) can neither blow up
     state nor dominate the flush shuffle.
+
+    Drain cost is per state partition, not codegen (each task pays a
+    state commit and a Python-runner setup, empty or not), so runners
+    start this through ``drain.start_bounded_drain``, sized to the cores.
     """
     import numpy as np
     import pandas as pd
@@ -353,14 +363,6 @@ def _stage_with_sentinel(
     return stage
 
 
-def _drain(edges: DataFrame, prefix: str):  # noqa: ANN202
-    # edge drains are the large-output case (pairs grow quadratically
-    # with frame occupancy): distributed file sink, never the driver
-    from neo4j_dynagraph_spark.streaming.drain import drain_stream_to_parquet
-
-    return drain_stream_to_parquet(edges, prefix)
-
-
 def streaming_frame_edges_from_parquet(
     spark,  # noqa: ANN001
     parquet_path: str,
@@ -369,7 +371,7 @@ def streaming_frame_edges_from_parquet(
     ts_is_nanos: bool | None = None,  # retained for API compat; ignored
 ) -> DataFrame:
     """Bounded-drain runner for the join form (Trigger.AvailableNow,
-    memory sink): returns the finalized edge set for differential
+    parquet sink): returns the finalized edge set for differential
     testing against the batch operator. The ts arrival type is derived
     from ``schema`` (``ts_is_nanos`` is ignored — the flag was always
     implied by the schema and hardcoding it broke when the testdata's
@@ -379,7 +381,8 @@ def streaming_frame_edges_from_parquet(
     stage = _stage_with_sentinel(spark, parquet_path, schema)
     stream = spark.readStream.schema(schema).parquet(stage)
     stream = normalize_stream_ts(spark, stream, schema)
-    return _drain(stream_frame_edges(stream, delta_seconds), "stream_edges")
+    edges = stream_frame_edges(stream, delta_seconds)
+    return drain_stream_to_parquet(edges, "stream_edges")
 
 
 def stateful_frame_edges_from_parquet(
@@ -408,7 +411,7 @@ def stateful_frame_edges_from_parquet(
         reader = reader.option("latestFirst", "false")
     stream = reader.parquet(stage)
     stream = normalize_stream_ts(spark, stream, schema)
-    return _drain(
+    return drain_stream_to_parquet(
         stateful_frame_edges(
             stream, delta_seconds, max_actors_per_frame=max_actors_per_frame
         ),
@@ -456,18 +459,9 @@ def streaming_degree_from_parquet(
     store = DimensionStore(
         spark, tempfile.mkdtemp(prefix="dynagraph_pairdim_"), ["actor1", "actor2"]
     )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:  # noqa: ANN001
-        store.merge(batch_df.select("actor1", "actor2"))
-
-    q = (
-        edges.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dynagraph_ckpt_"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    start_bounded_drain(
+        edges, lambda batch, _: store.merge(batch.select("actor1", "actor2"))
     )
-    q.awaitTermination()
     pairs = store.read()
     if pairs is None:
         raise ValueError(f"no edges drained from {parquet_path}")

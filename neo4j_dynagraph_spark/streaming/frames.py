@@ -18,13 +18,10 @@ prove batch/stream equivalence on identical input.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo4j_dynagraph_spark.streaming.drain import snapshot_and_drop
+from neo4j_dynagraph_spark.streaming.drain import drain_stream_to_memory
 
 
 def stream_tumbling_counts(
@@ -115,19 +112,9 @@ def streaming_presence_from_parquet(
     parquet_path = stage_single_file(parquet_path, "dynagraph_presence_src_")
     stream = spark.readStream.schema(schema).parquet(parquet_path)
     stream = normalize_stream_ts(spark, stream, schema)
-    dedup = stream_presence_dedup(stream, delta_seconds)
-    sink_name = f"stream_presence_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    query = (
-        dedup.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return drain_stream_to_memory(
+        stream_presence_dedup(stream, delta_seconds), "stream_presence"
     )
-    query.awaitTermination()
-    return snapshot_and_drop(spark, sink_name)
 
 
 def streaming_frame_counts_from_parquet(
@@ -152,19 +139,7 @@ def streaming_frame_counts_from_parquet(
     # single parquet file, stage a symlink inside a temp dir (testdata is
     # read-only — never copied or modified).
     parquet_path = stage_single_file(parquet_path)
-    reader = spark.readStream.schema(schema)
-    stream = reader.parquet(parquet_path)
+    stream = spark.readStream.schema(schema).parquet(parquet_path)
     stream = normalize_stream_ts(spark, stream, schema)
     agg = stream_tumbling_counts(stream, delta_seconds, slide_seconds=slide_seconds)
-    sink_name = f"stream_frames_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return snapshot_and_drop(spark, sink_name)
+    return drain_stream_to_memory(agg, "stream_frames", "complete")

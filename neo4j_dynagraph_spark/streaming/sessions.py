@@ -164,9 +164,8 @@ def stateful_sessions_from_parquet(
     at a directory of time-ordered files with cap 1 forces sessions to
     span micro-batches, exercising the state-carry path.
     """
-    import tempfile
-    import uuid
-
+    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
+    from neo4j_dynagraph_spark.streaming.drain import drain_stream_to_memory
     from neo4j_dynagraph_spark.streaming.staging import stage_single_file
 
     parquet_path = stage_single_file(parquet_path, "dynagraph_sess_src_")
@@ -175,22 +174,7 @@ def stateful_sessions_from_parquet(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         # one time-ordered file per batch, oldest first
         reader = reader.option("latestFirst", "false")
-    stream = reader.parquet(parquet_path)
-    from neo4j_dynagraph_spark.sources.tables import normalize_stream_ts
-
-    stream = normalize_stream_ts(spark, stream, schema)
-    sessions = stateful_sessionize(stream, gap_seconds)
-    sink_name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(sink_name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    stream = normalize_stream_ts(spark, reader.parquet(parquet_path), schema)
+    return drain_stream_to_memory(
+        stateful_sessionize(stream, gap_seconds), "stream_sessions"
     )
-    query.awaitTermination()
-    from neo4j_dynagraph_spark.streaming.drain import snapshot_and_drop
-
-    return snapshot_and_drop(spark, sink_name)

@@ -202,6 +202,27 @@ def test_ts_normalization_all_arrival_types(spark, tmp_path):
         assert got == want, f"{name} arrival: ts_ns mismatch {got} != {want}"
 
 
+def test_schema_cache_sees_rewritten_file(spark, tmp_path):
+    # the schema cache must not outlive the file it describes: a parquet
+    # file rewritten at the same path with a new column reads with the
+    # new schema (and its new rows), not the cached one
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [3], "r_name": ["x"]}), path)
+    # force a distinct mtime even on coarse-timestamp filesystems
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
 def test_bucketed_star_join_no_shuffle(spark, tmp_path):
     # the co-located-join layout: both facts bucketed+sorted on
     # frame_id, so a frame-keyed fact-to-fact join runs with ZERO

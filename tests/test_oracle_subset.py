@@ -45,6 +45,22 @@ def test_oracle_parity(spark, duck, name):
     assert _rowset(scols, srows) == _rowset(ocols, orows)
 
 
+def test_oracle_output_types_are_exact(duck):
+    """No oracle may emit a DuckDB HUGEINT or DECIMAL column: the driver
+    reads those into pandas as float64 (or object), so an exact Spark
+    bigint/double result mismatches on dtype even when every value is
+    equal (the q_intercontact ``sum(gap)`` case). Integer sums cast to
+    BIGINT, decimal arithmetic casts to DOUBLE."""
+    bad = []
+    for name, spec in sorted(REGISTRY.items()):
+        if spec.oracle is None:
+            continue
+        for col, dtype, *_ in duck.execute(f"DESCRIBE {spec.oracle}").fetchall():
+            if "HUGEINT" in dtype or "DECIMAL" in dtype:
+                bad.append(f"{name}.{col}: {dtype}")
+    assert not bad, bad
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as e
 

@@ -826,6 +826,46 @@ def test_bm25_quoted_term_is_safe(spark):
     assert [r.doc_id for r in out] == [1] and out[0].n_hit == 1
 
 
+def test_bm25_empty_terms_returns_empty_with_schema(spark):
+    from neo4j_dynagraph_spark.operators import text as t
+
+    docs = spark.createDataFrame(
+        [(1, "spark engine"), (2, "another doc")], "doc_id long, text string"
+    )
+    empty = t.bm25_scores(docs, [])
+    usual = t.bm25_scores(docs, ["spark"])
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in usual.schema
+    ]
+    assert empty.count() == 0
+
+
+@pytest.mark.parametrize(
+    "k1, b", [(float("inf"), 0.75), (1.2, float("nan")), (float("-inf"), 0.75)]
+)
+def test_bm25_rejects_non_finite_parameters(spark, k1, b):
+    from neo4j_dynagraph_spark.operators import text as t
+
+    docs = spark.createDataFrame([(1, "spark")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="finite"):
+        t.bm25_scores(docs, ["spark"], k1=k1, b=b)
+
+
+def test_sql_str_rejects_legacy_escaped_literals(spark):
+    # under the legacy parser conf a literal is read verbatim, so the
+    # backslash escaping would change or break every embedded term
+    from neo4j_dynagraph_spark.operators import text as t
+
+    conf = "spark.sql.parser.escapedStringLiterals"
+    assert t._sql_str(spark, "o'brien") == "'o\\'brien'"
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            t._sql_str(spark, "o'brien")
+    finally:
+        spark.conf.set(conf, "false")
+
+
 def test_gopher_rules_attribute_failures_per_rule(spark):
     base = "the a of and to " + " ".join(f"word{i}" for i in range(20))  # passes all
     docs = spark.createDataFrame(

@@ -35,11 +35,11 @@ import os
 import sys
 import tempfile
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from neo4j_dynagraph_spark import get_spark  # noqa: E402
+from neo4j_dynagraph_spark.streaming.drain import start_bounded_drain  # noqa: E402
 
 
 def _chunked_stage(spark, events_path: str, schema, n_chunks: int) -> str:
@@ -101,17 +101,8 @@ def _drain_with_metrics(spark, stream_df, output_mode: str):  # noqa: ANN001
     if output_mode != "append":
         raise ValueError("parquet scale drain supports append mode only")
     out = tempfile.mkdtemp(prefix="dynagraph_scale_out_")
-    ckpt = tempfile.mkdtemp(prefix="dynagraph_ckpt_")
     t0 = time.perf_counter()
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = start_bounded_drain(stream_df, "parquet", output_mode, path=out)
     wall = time.perf_counter() - t0
     rows_peak = mem_peak = batches = 0
     for p in q.recentProgress:
