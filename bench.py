@@ -8,13 +8,16 @@ cypher_query_timing.py:222 but without per-row deserialization).
 Like the reference, the N sorted timings yield median/p5/p95 per query
 (cypher_query_timing.py:217-233); the headline value is the sum of
 per-query medians, and the spread rides along so a run-to-run delta
-can be judged against measured noise. Prints ONE JSON line:
+can be judged against measured noise. Prints the full JSON payload:
 
     {"metric": "...", "value": <sum of per-query medians, sec>,
      "unit": "sec", "queries": {name: median_sec, ...},
      "spread": {name: {"p5": s, "p95": s}, ...},
      "drift": {name: {"first": s, "last": s}, ...},
      "position_effect": {name: ratio_or_null, ...}, "sf": <sf>}
+
+then, LAST, the compact record of :func:`compact_line` (total,
+calibration and every per-query median).
 
 Sampling is INTERLEAVED (round 9): instead of taking all N samples of
 a query back-to-back at a fixed session position — which let
@@ -128,6 +131,33 @@ def _probe(spark, sf_dir: str, n: int = 5) -> dict[str, float]:  # noqa: ANN001
             samples.append(time.perf_counter() - t0)
         out[name] = round(statistics.median(samples), 4)
     return out
+
+
+def compact_line(payload: dict) -> str:
+    """The compact record printed LAST on stdout. A harness that keeps
+    only a TAIL of stdout loses the full payload line once the registry
+    is wide (the recorded BENCH_r{N}.json parsed as null in r6/r9/r10),
+    so this line carries only the total, calibration, loadavg and every
+    per-query median (slowest first) — one JSON object, well under the
+    tail window. BENCH_local.json stays the authoritative full record.
+    """
+    queries = sorted(payload["queries"].items(), key=lambda kv: -kv[1])
+    return json.dumps(
+        {
+            "metric": f"sum of per-query medians, {len(queries)} queries "
+            "(compact tail record; full payload in BENCH_local.json)",
+            "value": payload["value"],
+            "unit": payload["unit"],
+            "queries": {k: round(v, 3) for k, v in queries},
+            "n_queries": len(queries),
+            "calibration": {
+                k: payload["calibration"][k] for k in ("first", "last")
+            },
+            "loadavg": payload["loadavg"],
+            "sf": payload["sf"],
+        },
+        separators=(",", ":"),
+    )
 
 
 def main() -> None:
@@ -268,27 +298,7 @@ def main() -> None:
         json.dump(payload, fh, indent=1)
         fh.write("\n")
     print(json.dumps(payload))
-    # The driver keeps only a TAIL of stdout; a wide registry's full
-    # payload line overflows it and the recorded BENCH_r{N}.json parses
-    # as null (r6/r9/r10). Print a COMPACT line LAST — totals,
-    # calibration, and the top-10 medians — sized well under the tail
-    # window, so the driver-side artifact always ends with parseable
-    # JSON. BENCH_local.json above stays the authoritative full record.
-    top10 = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
-    compact = {
-        "metric": f"sum of per-query medians, {len(timings)} queries "
-        "(compact tail record; full payload in BENCH_local.json)",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: round(v, 3) for k, v in top10.items()},
-        "n_queries": len(timings),
-        "calibration": {"first": cal_first, "last": cal_last},
-        "loadavg": {"before": list(load_before), "after": list(load_after)},
-        "sf": payload["sf"],
-    }
-    print(json.dumps(compact))
+    print(compact_line(payload))
 
 
 if __name__ == "__main__":

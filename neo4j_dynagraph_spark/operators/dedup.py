@@ -531,6 +531,12 @@ def remove_dup_spans(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # the window over raw positions equals the old distinct-table test
     # bit-for-bit. Measured at sf0.1: 3.39 s -> 2.79 s (1.21x), and at
     # scale one tokenization pass instead of two (guide §2.4).
+    # Skew trade: 3-gram frequencies are Zipfian, so this window sends
+    # every occurrence of a hot shingle to ONE task (window buffering,
+    # spill), where the old distinct dup-shingle table could broadcast.
+    # sf0.1 does not exercise it; at scale use the hash-keyed variants
+    # (exact_dup_spans / remove_exact_dup_spans partition on a uniform
+    # 60-bit hash).
     sw = Window.partitionBy("shingle")
     starts = (
         sh.withColumn("_mn", F.min("doc_id").over(sw))

@@ -23,8 +23,11 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
 
 from neo4j_dynagraph_spark.operators.hub import checkpoint_hub
@@ -52,6 +55,46 @@ def _materialize(
     path = _os.path.join(spill_dir, name)
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def _relax(
+    state: DataFrame,
+    keys: list[str],
+    step: Callable[[DataFrame, int], DataFrame],
+    combine: Column,
+    rounds: int,
+    delta: str | None = None,
+) -> list[DataFrame]:
+    """Relaxation supersteps (Pregelix's join + group-by round): each
+    of ``rounds`` rounds unions ``step(frontier, r)`` (r 0-based) into
+    ``state``, reduces it by ``combine`` grouped on ``keys`` and
+    eagerly checkpoints it, so round i never re-executes 1..i-1. The
+    frontier is the whole state, or with ``delta`` naming a column
+    that only decreases, just the rows whose value fell or appeared
+    last round, lazily checkpointed (delta-frontier rule: a smaller
+    value dominates every expansion of a larger one). Returns the
+    state after every round."""
+    frontier, states = state, []
+    for r in range(rounds):
+        merged = (
+            state.unionByName(step(frontier, r))
+            .groupBy(*keys)
+            .agg(combine)
+            .localCheckpoint()
+        )
+        frontier = merged
+        if delta is not None:
+            old = f"{delta}_old"
+            prev = state.select(*keys, F.col(delta).alias(old))
+            frontier = (
+                merged.join(prev, keys, "left")
+                .where(F.col(old).isNull() | (F.col(delta) < F.col(old)))
+                .select(*merged.columns)
+                .localCheckpoint(eager=False)
+            )
+        state = merged
+        states.append(state)
+    return states
 
 
 def symmetrize(edges: DataFrame, a1: str = "actor1", a2: str = "actor2") -> DataFrame:
@@ -1882,14 +1925,7 @@ def temporal_walks(
     adj_arr = adj.groupBy("src").agg(
         F.array_sort(F.collect_list(F.struct("frame_id", "dst"))).alias("nbrs")
     )
-    if spill_dir is None:
-        adj_arr = adj_arr.localCheckpoint()
-    else:
-        import os as _os
-
-        path = _os.path.join(spill_dir, "twalk_adj")
-        adj_arr.write.mode("overwrite").parquet(path)
-        adj_arr = adj_arr.sparkSession.read.parquet(path)
+    adj_arr = _materialize(adj_arr, spill_dir, "twalk_adj")
     if max_gap is None:
         cur = adj_arr.select(
             F.col("src").alias("walk_id"),
@@ -2378,19 +2414,15 @@ def bounded_distances(edges: DataFrame, max_dist: int) -> DataFrame:
         .select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
         .localCheckpoint()
     )
-    for i in range(max_dist):
-        frontier = reach.where(F.col("d") == i)
-        expanded = (
-            frontier.join(sym, frontier.v == sym.src)
-            .select("s", F.col("dst").alias("v"), F.lit(i + 1).alias("d"))
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        frontier = state.where(F.col("d") == i)
+        return frontier.join(sym, frontier.v == sym.src).select(
+            "s", F.col("dst").alias("v"), F.lit(i + 1).alias("d")
         )
-        reach = (
-            reach.unionByName(expanded)
-            .groupBy("s", "v")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint()
-        )
-    return reach
+
+    states = _relax(reach, ["s", "v"], step, F.min("d").alias("d"), max_dist)
+    return states[-1] if states else reach
 
 
 def harmonic_centrality(
@@ -2802,27 +2834,23 @@ def kmv_neighborhood(
         ),
         6,
     )
-    per_d = []
-    for d in range(1, max_dist + 1):
-        prop = state.join(sym, state.v == sym.dst).select(
+    states = _relax(
+        state,
+        ["v"],
+        lambda st, _: st.join(sym, st.v == sym.dst).select(
             F.col("src").alias("v"), "us"
+        ),
+        merged_us,
+        max_dist,
+    )
+    per_d = [
+        st.select(est.alias("e")).agg(
+            F.lit(d).alias("d"),
+            F.round(F.sum(F.col("e") - 1), 6).alias("est_pairs"),
         )
-        state = (
-            state.unionByName(prop)
-            .groupBy("v")
-            .agg(merged_us)
-            .localCheckpoint()
-        )
-        per_d.append(
-            state.select(est.alias("e")).agg(
-                F.lit(d).alias("d"),
-                F.round(F.sum(F.col("e") - 1), 6).alias("est_pairs"),
-            )
-        )
-    out = per_d[0]
-    for frame in per_d[1:]:
-        out = out.unionByName(frame)
-    return out.orderBy("d")
+        for d, st in enumerate(states, start=1)
+    ]
+    return reduce(DataFrame.unionByName, per_d).orderBy("d")
 
 
 def shortest_paths_weighted(
@@ -2850,17 +2878,16 @@ def shortest_paths_weighted(
             [(int(source),)], "v long"
         ).select("v", F.lit(0).cast("long").alias("cost"))
     )
-    for _ in range(max_hops):
-        relax = dist.join(sym, dist.v == sym.src).select(
-            F.col("dst").alias("v"),
-            (dist.cost + sym.cost).alias("cost"),
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("v")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint()
-        )
+    states = _relax(
+        dist,
+        ["v"],
+        lambda d, _: d.join(sym, d.v == sym.src).select(
+            F.col("dst").alias("v"), (d.cost + sym.cost).alias("cost")
+        ),
+        F.min("cost").alias("cost"),
+        max_hops,
+    )
+    dist = states[-1] if states else dist
     return dist.select(F.col("v").alias("actor"), "cost").orderBy(
         "cost", "actor"
     )
@@ -2932,50 +2959,38 @@ def neighbor_sampling(
     return out.orderBy("seed", "hop", "src", "dst")
 
 
-def _temporal_arrivals(
-    sym: DataFrame, seeds: DataFrame, max_hops: int
+def _earliest_arrivals(
+    contacts: DataFrame,
+    state: DataFrame,
+    max_hops: int,
+    lane: str | None = None,
 ) -> DataFrame:
-    """Multi-source earliest-arrival table over time-respecting paths:
-    (s, v, t) = min earliest-arrival frame from seed s to node v in
-    <= max_hops edges (t = -1 for v == s, i.e. depart-any-time).
+    """Earliest-arrival frame over time-respecting paths of <=
+    ``max_hops`` contacts (frame_id, src, dst), from seed rows
+    (*carry, v, t = -1) where ``carry`` is a source key, a lane key or
+    nothing. With ``lane``, a contact extends only the state rows
+    whose lane key equals its ``lane`` column (renamed on the contact
+    side: localCheckpoint preserves attribute ids, asrc/dsrc
+    precedent). Delta iteration on t — an earlier arrival can ride
+    every contact a later one can; full-state re-expansion was 2x
+    slower at sf0.1. Exactly ``max_hops`` rounds, no data-dependent
+    actions."""
+    keys = [c for c in state.columns if c != "t"]
+    carry = [c for c in keys if c != "v"]
 
-    Delta iteration: only arrivals that IMPROVED last round expand
-    (an earlier arrival can ride every edge a later one can, so the
-    min-arrival frontier dominates all other path prefixes — the
-    full-state re-expansion joined ~frontier x frame-degree x H rows
-    and was 2x slower at sf0.1 even vs the fixpoint form). Exactly
-    ``max_hops`` join+min rounds, no data-dependent actions. State is
-    O(V * |seeds|) — the sampled estimator's scale lever."""
-    arrival = seeds.select(
-        "s",
-        F.col("s").alias("v"),
-        F.lit(-1).cast("long").alias("t"),
-    ).localCheckpoint()
-    frontier = arrival
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(sym, frontier.v == sym.src)
+    def step(frontier: DataFrame, _: int) -> DataFrame:
+        on = frontier.v == contacts.src
+        if lane is not None:
+            on = on & (frontier[carry[0]] == contacts[lane])
+        return (
+            frontier.join(contacts, on)
             .where(F.col("frame_id") >= F.col("t"))
-            .groupBy("s", F.col("dst").alias("v"))
-            .agg(F.min("frame_id").alias("t"))
+            .groupBy(*carry, F.col("dst").alias("v"))
+            .agg(F.min("frame_id").cast("long").alias("t"))
         )
-        merged = (
-            arrival.unionByName(cand)
-            .groupBy("s", "v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = arrival.select("s", "v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, ["s", "v"], "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
-            )
-            .select("s", "v", "t")
-            .localCheckpoint(eager=False)
-        )
-        arrival = merged
-    return arrival
+
+    states = _relax(state, keys, step, F.min("t").alias("t"), max_hops, delta="t")
+    return states[-1] if states else state
 
 
 def temporal_closeness(
@@ -3007,7 +3022,13 @@ def temporal_closeness(
         frame_edges.select("frame_id", "actor1", "actor2").distinct()
     ).localCheckpoint()
     seeds = sym.select(F.col("src").alias("s")).distinct()
-    arrival = _temporal_arrivals(sym, seeds, max_hops)
+    arrival = _earliest_arrivals(
+        sym,
+        seeds.select(
+            "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
+        ).localCheckpoint(),
+        max_hops,
+    )
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     return (
         arrival.where(F.col("v") != F.col("s"))
@@ -3055,7 +3076,13 @@ def temporal_closeness_sampled(
     ).localCheckpoint()
     nodes = sym.select(F.col("src").alias("s")).distinct()
     seeds = nodes.join(sources, "s").localCheckpoint()
-    arrival = _temporal_arrivals(sym, seeds, max_hops)
+    arrival = _earliest_arrivals(
+        sym,
+        seeds.select(
+            "s", F.col("s").alias("v"), F.lit(-1).cast("long").alias("t")
+        ).localCheckpoint(),
+        max_hops,
+    )
     w0 = sym.agg(F.min("frame_id").cast("long").alias("w0"))
     nv = nodes.agg(F.count(F.lit(1)).cast("double").alias("nv"))
     ns = seeds.agg(F.count(F.lit(1)).cast("double").alias("ns"))
@@ -3741,31 +3768,7 @@ def _si_state(
     ).select(
         F.col("src").alias("v"), F.lit(-1).cast("long").alias("t")
     ).localCheckpoint()
-    frontier = state
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(trans, frontier.v == trans.src)
-            .where(F.col("frame_id") >= F.col("t"))
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("frame_id").cast("long").alias("t"))
-        )
-        merged = (
-            state.unionByName(cand)
-            .groupBy("v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = state.select("v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, "v", "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
-            )
-            .select("v", "t")
-            .localCheckpoint(eager=False)
-        )
-        state = merged
-    return trans, state
+    return trans, _earliest_arrivals(trans, state, max_hops)
 
 
 def si_spread(
@@ -3788,7 +3791,7 @@ def si_spread(
     earlier infection can ride every contact a later one can, so the
     min-merged earliest-infection state after round h is exactly the
     <= h-hop earliest infection: the same delta-iteration dominance
-    argument as :func:`_temporal_arrivals`, with ONE global state row
+    argument as :func:`_earliest_arrivals`, with ONE global state row
     per node — O(V) state, not the all-sources family's O(V^2).
 
     The coin filter lands on the symmetrized contact stream BEFORE
@@ -3920,50 +3923,6 @@ def wl_refinement(edges: DataFrame, rounds: int = 3) -> DataFrame:
     )
 
 
-def _si_multi(
-    trans: DataFrame,
-    state: DataFrame,
-    max_hops: int,
-    key: str,
-    tkey: str,
-) -> DataFrame:
-    """Lane-keyed SI delta iteration shared by the threshold sweep
-    (key = beta lane) and the immunization evaluation (key =
-    removal-policy lane): trans carries (``tkey``, frame_id, src,
-    dst) — the lane key pre-renamed because localCheckpoint preserves
-    attribute ids (asrc/dsrc precedent) — and state/frontier carry
-    (``key``, v, t). Exactly ``max_hops`` join+min rounds, O(V *
-    lanes) state; the min-merge dominance argument is si_spread's."""
-    frontier = state
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(
-                trans,
-                (frontier[key] == trans[tkey]) & (frontier.v == trans.src),
-            )
-            .where(F.col("frame_id") >= F.col("t"))
-            .groupBy(F.col(tkey).alias(key), F.col("dst").alias("v"))
-            .agg(F.min("frame_id").cast("long").alias("t"))
-        )
-        merged = (
-            state.unionByName(cand)
-            .groupBy(key, "v")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint()
-        )
-        prev = state.select(key, "v", F.col("t").alias("t_old"))
-        frontier = (
-            merged.join(prev, [key, "v"], "left")
-            .where(
-                F.col("t_old").isNull() | (F.col("t") < F.col("t_old"))
-            )
-            .select(key, "v", "t")
-            .localCheckpoint(eager=False)
-        )
-        state = merged
-    return state
-
-
 def si_attack_rates(
     frame_edges: DataFrame,
     seed_mod: int = 20,
@@ -4047,7 +4006,7 @@ def si_attack_rates(
         )
         .localCheckpoint()
     )
-    state = _si_multi(trans, state, max_hops, key="p10", tkey="tp10")
+    state = _earliest_arrivals(trans, state, max_hops, lane="tp10")
     nv = nodes.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     return (
         state.groupBy("p10")
@@ -4317,7 +4276,7 @@ def si_immunized(
         )
         .localCheckpoint()
     )
-    state = _si_multi(trans, seeds, max_hops, key="policy", tkey="tpolicy")
+    state = _earliest_arrivals(trans, seeds, max_hops, lane="tpolicy")
     nv = nodes.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     nrm = removed.groupBy("policy").agg(
         F.count(F.lit(1)).cast("long").alias("n_removed")

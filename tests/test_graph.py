@@ -1761,3 +1761,79 @@ def test_sage_aggregate_closed_form(spark):
         assert out[leaf].h2_mean_f == pytest.approx(float(h2[0]), abs=1e-6)
     # own features pass through
     assert out[3].f == 3
+
+
+def _py_earliest_arrivals(contacts, seeds, max_hops):
+    """Hop-bounded synchronous Bellman-Ford over time-respecting
+    contacts: contacts[lane] is a list of directed (frame, src, dst),
+    seeds a list of (lane, key, v); returns {(key, v): t}."""
+    arr = {(k, v): -1 for _, k, v in seeds}
+    lane_of = {k: lane for lane, k, _ in seeds}
+    for _ in range(max_hops):
+        nxt = dict(arr)
+        for (k, u), t in arr.items():
+            for f, a, b in contacts[lane_of[k]]:
+                if a == u and f >= t and f < nxt.get((k, b), f + 1):
+                    nxt[(k, b)] = f
+        arr = nxt
+    return arr
+
+
+def test_earliest_arrivals_delta_matches_full_expansion(spark, monkeypatch):
+    """The delta frontier (expand only arrivals that improved) must give
+    the same state as re-expanding the whole state every round, and
+    both must equal a pure-Python hop-bounded reference — for a
+    multi-source state keyed by source and for a two-lane state whose
+    lanes ride different contact sets."""
+    import random
+
+    rng = random.Random(7)
+    n_nodes, n_frames = 9, 6
+
+    def draw(n):
+        out = set()
+        while len(out) < n:
+            a, b = rng.sample(range(n_nodes), 2)
+            f = rng.randrange(n_frames)
+            out |= {(f, a, b), (f, b, a)}
+        return sorted(out)
+
+    lanes = {0: draw(14), 1: draw(10)}
+    sources = [(0, s, s) for s in range(n_nodes)]
+    seeds = [(lane, lane, v) for lane in lanes for v in (0, 4)]
+    single = spark.createDataFrame(lanes[0], "frame_id long, src long, dst long")
+    laned = spark.createDataFrame(
+        [(lane, *c) for lane, cs in lanes.items() for c in cs],
+        "tl long, frame_id long, src long, dst long",
+    )
+    src_state = spark.createDataFrame(
+        [(s, v, -1) for _, s, v in sources], "s long, v long, t long"
+    )
+    lane_state = spark.createDataFrame(
+        [(k, v, -1) for _, k, v in seeds], "l long, v long, t long"
+    )
+
+    relax = graph._relax
+    calls = []
+
+    def run(delta_on, contacts, state, hops, lane=None):
+        def counted(*a, **kw):
+            if not delta_on:
+                kw["delta"] = None
+            states = relax(*a, **kw)
+            calls.append((a[4], len(states)))
+            return states
+
+        monkeypatch.setattr(graph, "_relax", counted)
+        out = graph._earliest_arrivals(contacts, state, hops, lane=lane)
+        return {(r[0], r.v): r.t for r in out.collect()}
+
+    for hops in range(1, 5):
+        want = _py_earliest_arrivals({0: lanes[0]}, sources, hops)
+        assert run(True, single, src_state, hops) == want
+        assert run(False, single, src_state, hops) == want
+        want = _py_earliest_arrivals(lanes, seeds, hops)
+        assert run(True, laned, lane_state, hops, lane="tl") == want
+        assert run(False, laned, lane_state, hops, lane="tl") == want
+    # _relax hands back exactly one state per round
+    assert calls and all(rounds == n for rounds, n in calls)
